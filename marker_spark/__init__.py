@@ -7,7 +7,6 @@ SURVEY.md for the reference analysis this engine derives from.
 from .agg import (  # noqa: F401
     build_partials,
     build_partials_arrow,
-    build_partials_shuffled,
     collect_sketch,
     collect_sketches,
     merge_partials,
@@ -39,7 +38,6 @@ __all__ = [
     "ThetaSketch",
     "build_partials",
     "build_partials_arrow",
-    "build_partials_shuffled",
     "collect_sketch",
     "collect_sketches",
     "merge_partials",

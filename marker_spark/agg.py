@@ -11,21 +11,26 @@ shape is explicit here:
      vectorized update kernel, accumulating one sketch per group key
      *per partition* (a hand-rolled map-side combine).  Raw rows are
      never shuffled; only the small serialized sketch states are.
-  2. **Merge** (``merge_partials``): groupBy(group) + ``applyInPandas``
+  2. **Merge** (``merge_partials``): groupBy(group) + ``applyInArrow``
      combining states with the sketch's associative merge.  When the
      number of partials per group is large (wide clusters) an optional
      intermediate tree round caps per-task merge fan-in so no single
      reducer ORs thousands of multi-MB bitmaps.
 
-Skew note: because partials are keyed per-partition *inside* the map
-task, a hot group key (zipf ``source``) costs nothing extra at build
-time — the shuffle moves one sketch row per (partition, group), not the
-raw rows.  Salting is therefore only needed on the merge side, which
-``tree_rounds`` provides deterministically (no rand()).
+Skew note: partials are keyed per-partition *inside* the map task, so
+the shuffle after the build moves one sketch row per (partition, group),
+never the raw rows.  But the task that builds a zipf-hot group's partial
+still sees all of that group's rows in its partition, so the build side
+has one skew owner, :func:`salted_repartition`: it splits each group into
+salts by row share and places every (group, salt) key on its own
+partition ahead of the partial build.  On the merge side
+``merge_partials(tree_fanin=...)`` caps per-task merge fan-in
+deterministically (no rand()).
 """
 
 from __future__ import annotations
 
+import math
 import zlib
 from collections.abc import Callable, Iterator
 from typing import Any
@@ -355,55 +360,65 @@ def build_partials_arrow(
     return df.mapInArrow(partition_fn, schema=schema)
 
 
+def _place_keys(salt_counts: dict, shares: dict, n: int) -> dict:
+    """Longest-processing-time bin-pack of the (group, salt) keys onto
+    ``n`` partitions: heaviest key first (weight = the group's row share
+    over its salt count), each onto the currently lightest partition,
+    ties broken by group, salt and partition index so the placement is
+    deterministic.  Returns group -> partition id per salt."""
+    import heapq
+
+    keys = sorted(
+        (-shares[g] / s, g, i) for g, s in salt_counts.items() for i in range(s)
+    )
+    loads = [(0.0, p) for p in range(n)]
+    placed = {g: [0] * s for g, s in salt_counts.items()}
+    for neg_w, g, i in keys:
+        load, p = heapq.heappop(loads)
+        placed[g][i] = p
+        heapq.heappush(loads, (load - neg_w, p))
+    return placed
+
+
 def salted_repartition(
     df: DataFrame, group_col: str, shares: dict[str, float], parallelism: int
 ) -> DataFrame:
     """Repartition rows by (group, per-group salt) with salt counts
     proportional to each group's row share — a zipf-hot group gets
-    ~share*parallelism salts, tail groups 1.  Bounds both skew (no
-    task sees more than ~1/parallelism of the rows) and state blowup
+    ~share*parallelism salts, tail groups 1.
+
+    The driver places every (group, salt) key on its own partition
+    (:func:`_place_keys`, a balanced bin-pack on row share) and
+    ``repartitionById`` routes the rows there, so two salts of the hot
+    group never collide in one task and no task is launched without a
+    key: the output has ``min(parallelism, #keys)`` partitions.  Groups
+    missing from ``shares`` and NULL groups keep one salt and go to the
+    partition the hash of the group picks.  Bounds both skew (no task
+    sees much more than ~1/parallelism of the rows) and state blowup
     (total partial states ~ parallelism + #groups)."""
+    if parallelism < 1:
+        raise ValueError(f"salted_repartition: parallelism must be >= 1, got {parallelism}")
+    bad = {g: s for g, s in shares.items() if not (s >= 0 and math.isfinite(s))}
+    if bad:
+        raise ValueError(
+            f"salted_repartition: shares must be finite and non-negative, got {bad}"
+        )
     salt_counts = {
         g: max(1, round(share * parallelism)) for g, share in shares.items()
     }
-    expr = F.lit(1)
-    for g, s in salt_counts.items():
-        expr = F.when(F.col(group_col) == g, F.lit(s)).otherwise(expr)
-    salted = df.withColumn("__salt", (F.monotonically_increasing_id() % expr).cast("int"))
-    # 4x more partitions than parallelism: total state count is fixed
-    # at ~Sigma salt_g (one per distinct key), while smaller tasks let
-    # the scheduler smooth hash collisions between hot keys.
-    return salted.repartition(parallelism * 4, group_col, "__salt").drop("__salt")
-
-
-def build_partials_shuffled(
-    df: DataFrame,
-    factory: Callable[[], Any],
-    update: Callable[[Any, pd.DataFrame], None],
-    group_cols: list[str] | None = None,
-    salt: int = 8,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Shuffle-first partial build for LARGE sketch states.
-
-    The map-side combine of :func:`build_partials` creates one state per
-    (input partition, group) — perfect for small states (HLL registers,
-    CMS grids), but for a multi-MB Bloom bitmap P*G states can dwarf the
-    raw data.  Here we repartition the raw rows by (group, salt) first:
-    at most ~G*salt states exist in total, and the shuffle moves rows
-    (cheap) instead of bitmaps (expensive).  The salt column defuses
-    group-key skew (a zipf-hot `source` is spread over `salt` tasks) —
-    the explicit skew handling the north_rule requires; correctness is
-    unaffected because the merge is associative.
-    """
-    group_cols = list(group_cols or [])
-    salted = df.withColumn("__salt", (F.monotonically_increasing_id() % salt).cast("int"))
-    nparts = partitions or max(salt * max(len(group_cols), 1) * 4, salt)
-    if group_cols:
-        salted = salted.repartition(nparts, *(group_cols + ["__salt"]))
-    else:
-        salted = salted.repartition(nparts, "__salt")
-    return build_partials(salted, factory, update, group_cols)
+    n = max(1, min(parallelism, sum(salt_counts.values())))
+    group, row = F.col(group_col), F.col("__row")
+    pid = F.pmod(F.hash(group), F.lit(n))
+    for g, ps in _place_keys(salt_counts, shares, n).items():
+        salt = (row % len(ps)).cast("int")
+        pid = F.when(group == g, F.array(*map(F.lit, ps))[salt]).otherwise(pid)
+    return (
+        df.withColumn("__row", F.monotonically_increasing_id())
+        .withColumn("__pid", pid)
+        .drop("__row")
+        .repartitionById(n, "__pid")
+        .drop("__pid")
+    )
 
 
 def sketch_agg(
@@ -413,24 +428,15 @@ def sketch_agg(
     sketch_cls: type,
     group_cols: list[str] | None = None,
     tree_fanin: int = 0,
-    mode: str = "mapside",
-    salt: int = 8,
     finalize: Callable[[Any], dict] | None = None,
     finalize_schema: str | None = None,
 ) -> DataFrame:
     """Partial build + merge in one call → DataFrame (group..., sketch),
-    or (group..., finalize columns) when ``finalize`` is given.
-
-    mode="mapside" (default): combine inside each input partition; best
-    when the sketch state is small relative to the partition's rows.
-    mode="shuffle": repartition rows by (group, salt) first; best when
-    the state is large (big Bloom filters) — bounds total partial-state
-    volume at ~G*salt states regardless of input partition count.
+    or (group..., finalize columns) when ``finalize`` is given.  Partials
+    combine inside each input partition; to bound a hot group's task,
+    run the input through :func:`salted_repartition` first.
     """
-    if mode == "shuffle":
-        partials = build_partials_shuffled(df, factory, update, group_cols, salt=salt)
-    else:
-        partials = build_partials(df, factory, update, group_cols)
+    partials = build_partials(df, factory, update, group_cols)
     return merge_partials(
         partials, sketch_cls, group_cols, tree_fanin,
         finalize=finalize, finalize_schema=finalize_schema,

@@ -604,6 +604,9 @@ def _retention_via_drop_prefilter(
     from ..agg import unpack_state
     from ..sketches.bloom import BloomSketch
 
+    # a NULL id never matches keep, so the plain semi-join drops the
+    # row; drop it here too, before the id reaches the Bloom UDFs
+    index = index.where(F.col(id_col).isNotNull())
     # drop = index ids - keep.  Semi/anti joins ignore right-side
     # multiplicity, so keep is never distinct'd (that alone is a full
     # shuffle of the corpus-sized retention list); while the per-shard
@@ -634,8 +637,8 @@ def _retention_via_drop_prefilter(
         bf = memo.get("bf")
         if bf is None:
             bf = memo["bf"] = unpack_state(BloomSketch, bcast.value)
-        # index ids are non-null by construction; a nullable id column
-        # would arrive as float64 and corrupt the hashes (CLAUDE.md r10)
+        # NULL ids are filtered out above: a null in the chunk would
+        # make pandas hand the ids over as float64 and corrupt the hashes
         arr = ids.to_numpy(dtype=np.int64)
         return pd.Series(bf.contains_fixed_width(arr.view(np.uint8).reshape(-1, 8)))
 
@@ -694,6 +697,10 @@ def compact_band_index(
     fraction of a multi-year index; default ``None`` keeps the plain
     join (optimal when ``keep`` broadcasts).
     """
+    if prefilter_fp is not None and not 0 < prefilter_fp < 1:
+        raise ValueError(
+            f"compact_band_index: prefilter_fp must be in (0, 1), got {prefilter_fp}"
+        )
     keys = ["band_id", "band_hash"]
     if prefilter_fp is not None:
         # no .distinct() on keep: the prefilter path only semi/anti

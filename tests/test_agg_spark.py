@@ -7,7 +7,17 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from marker_spark.agg import collect_sketch, collect_sketches, sketch_agg
+from pyspark.sql import functions as F
+
+from marker_spark.agg import (
+    _place_keys,
+    build_partials_arrow,
+    collect_sketch,
+    collect_sketches,
+    merge_partials,
+    salted_repartition,
+    sketch_agg,
+)
 from marker_spark.datagen import gen_tokenized_sequences
 from marker_spark.kernels import (
     bloom_factory,
@@ -121,19 +131,132 @@ def test_membership_udf_fp_bounded(spark):
     assert np.array_equal(got, local_any)
 
 
-def test_shuffle_mode_matches_mapside(spark, tokseq_df):
-    """mode='shuffle' (salted raw-row repartition) must produce the
-    exact same state as the map-side combine path."""
+def _arrow_updater(factory, update, group_col):
+    """build_partials_arrow batch updater over a pandas updater."""
+
+    def batch_update(states, batch):
+        for key, sub in batch.to_pandas().groupby(group_col, sort=False):
+            sk = states.get((key,))
+            if sk is None:
+                sk = states[(key,)] = factory()
+            update(sk, sub)
+
+    return batch_update
+
+
+def test_salted_build_matches_unsalted(spark, tokseq_df):
+    """salted_repartition -> build_partials_arrow -> merge_partials must
+    give every source the same Bloom state as the unsalted build."""
     factory = bloom_factory(capacity=300_000, fp=0.001)
-    update = bloom_ngram_updater(NGRAM)
-    a = collect_sketch(
-        sketch_agg(tokseq_df, factory, update, BloomSketch, mode="mapside"), BloomSketch
+    batch_update = _arrow_updater(factory, bloom_ngram_updater(NGRAM), "source")
+    counts = {r["source"]: r["count"] for r in tokseq_df.groupBy("source").count().collect()}
+    shares = {g: c / N_DOCS for g, c in counts.items()}
+    salted = salted_repartition(tokseq_df, "source", shares, parallelism=8)
+
+    def build(df):
+        merged = merge_partials(build_partials_arrow(df, batch_update, ["source"]),
+                                BloomSketch, ["source"])
+        return collect_sketches(merged, BloomSketch, ["source"])
+
+    a, b = build(tokseq_df), build(salted)
+    assert set(a) == set(b) == {(g,) for g in counts}
+    for key in a:
+        np.testing.assert_array_equal(a[key].blocks, b[key].blocks)
+        assert a[key].n_inserted == b[key].n_inserted
+
+
+def _groups_df(spark, groups):
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame({"g": groups, "v": range(len(groups))}), schema="g string, v long"
+    ).repartition(3)
+
+
+def _partitions_by_group(df) -> dict:
+    """group -> {partition id: rows} of a repartitioned frame."""
+    out: dict = {}
+    rows = df.groupBy("g", F.spark_partition_id().alias("p")).count().collect()
+    for r in rows:
+        out.setdefault(r["g"], {})[r["p"]] = r["count"]
+    return out
+
+
+SHARES = {"hot": 0.45, "b": 0.2, "c": 0.15, "d": 0.1, "e": 0.05}
+GROUPS = ["hot"] * 4500 + ["b"] * 2000 + ["c"] * 1500 + ["d"] * 1000 + ["e"] * 500
+
+
+def test_salted_placement_one_partition_per_key(spark):
+    """Every (group, salt) key sits on its own partition: a group's rows
+    fill exactly the partitions of its salts, and the hot group's salts
+    are distinct partitions."""
+    parallelism = 8
+    salts = {g: max(1, round(s * parallelism)) for g, s in SHARES.items()}
+    placed = _place_keys(salts, SHARES, parallelism)
+    assert len(set(placed["hot"])) == salts["hot"] == 4
+    out = salted_repartition(_groups_df(spark, GROUPS), "g", SHARES, parallelism)
+    by_group = _partitions_by_group(out)
+    for g, ps in placed.items():
+        assert set(by_group[g]) == set(ps), g
+    # rows of the hot group split evenly over its salts
+    assert max(by_group["hot"].values()) - min(by_group["hot"].values()) <= 3
+
+
+@pytest.mark.parametrize("parallelism", [4, 8, 32])
+def test_salted_partition_count(spark, parallelism):
+    """min(parallelism, #keys) partitions; none empty when the keys
+    cover them."""
+    n_keys = sum(max(1, round(s * parallelism)) for s in SHARES.values())
+    out = salted_repartition(_groups_df(spark, GROUPS), "g", SHARES, parallelism)
+    n = min(parallelism, n_keys)
+    assert out.rdd.getNumPartitions() == n
+    used = {p for ps in _partitions_by_group(out).values() for p in ps}
+    assert used <= set(range(n))
+    if n_keys >= parallelism:
+        assert used == set(range(n))
+
+
+def test_salted_unknown_and_null_groups_kept(spark):
+    """Groups missing from shares and NULL groups fall back to the hash
+    of the group: no row is lost, and NULLs still reach NULL_KEY."""
+    from marker_spark.agg import NULL_KEY
+    from marker_spark.kernels import bloom_binary_updater
+
+    groups = GROUPS + ["zz"] * 200 + [None] * 300
+    out = salted_repartition(_groups_df(spark, groups), "g", SHARES, 8)
+    by_group = _partitions_by_group(out)
+    assert sum(by_group["zz"].values()) == 200 and len(by_group["zz"]) == 1
+    assert sum(by_group[None].values()) == 300 and len(by_group[None]) == 1
+    assert out.count() == len(groups)
+    sk = collect_sketches(
+        sketch_agg(out.withColumn("v", F.col("v").cast("string")),
+                   bloom_factory(20_000, 0.01), bloom_binary_updater("v"),
+                   BloomSketch, group_cols=["g"]),
+        BloomSketch, ["g"],
     )
-    b = collect_sketch(
-        sketch_agg(tokseq_df, factory, update, BloomSketch, mode="shuffle", salt=4), BloomSketch
-    )
-    np.testing.assert_array_equal(a.blocks, b.blocks)
-    assert a.n_inserted == b.n_inserted
+    assert sk[(NULL_KEY,)].n_inserted == 300
+    assert sk[("zz",)].n_inserted == 200
+
+
+@pytest.mark.parametrize(
+    "shares, parallelism, match",
+    [
+        ({"a": 1.0}, 0, "parallelism"),
+        ({"a": 0.5, "b": -0.1}, 4, "shares"),
+        ({"a": float("nan")}, 4, "shares"),
+    ],
+)
+def test_salted_repartition_rejects_bad_input(spark, tokseq_df, shares, parallelism, match):
+    """Bad sizing fails on the driver with a clear message, before any
+    Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup("salted-bad-input", "salted-bad-input")
+    try:
+        with pytest.raises(ValueError, match=match):
+            salted_repartition(tokseq_df, "source", shares, parallelism)
+        assert sc.statusTracker().getJobIdsForGroup("salted-bad-input") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_null_group_keys_reach_a_sketch(spark):

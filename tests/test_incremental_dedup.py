@@ -1029,6 +1029,40 @@ def test_compact_prefilter_nothing_dropped(spark):
     release_all()
 
 
+@pytest.mark.parametrize("fp", [0.0, -0.1, 1.0, 1.5, float("nan")])
+def test_compact_prefilter_fp_out_of_range(spark, fp):
+    """prefilter_fp outside (0, 1) fails at the call with a message that
+    names the argument, not deep inside BloomParams.solve."""
+    from marker_spark.ops.dedup import compact_band_index
+
+    index = spark.createDataFrame([(1, 0, 7)], "doc_id long, band_id int, band_hash long")
+    keep = spark.createDataFrame([(1,)], "doc_id long")
+    with pytest.raises(ValueError, match="prefilter_fp"):
+        compact_band_index(index, keep, prefilter_fp=fp)
+
+
+@pytest.mark.parametrize("max_bucket", [None, 2])
+def test_compact_null_ids_dropped_on_both_paths(spark, max_bucket):
+    """An index row with a NULL id is dropped by the plain semi-join; the
+    drop-list prefilter path must drop it too instead of crashing in
+    its Bloom UDF."""
+    from marker_spark.ops.dedup import compact_band_index
+
+    index = spark.createDataFrame(
+        [(1, 0, 7), (2, 0, 7), (3, 0, 7), (None, 0, 7), (4, 0, 9), (None, 0, 9)],
+        "doc_id long, band_id int, band_hash long",
+    )
+    keep = spark.createDataFrame([(1,), (2,), (4,)], "doc_id long")
+    r0, f0 = compact_band_index(index, keep, max_bucket=max_bucket)
+    r1, f1 = compact_band_index(index, keep, max_bucket=max_bucket, prefilter_fp=0.01)
+    want = sorted(r0.collect())
+    assert sorted(r1.collect()) == want
+    assert all(r["doc_id"] is not None for r in want)
+    if max_bucket is not None:
+        assert sorted(f1.collect()) == sorted(f0.collect())
+    release_all()
+
+
 @pytest.mark.parametrize("delta", [-1, 0, 1])
 @pytest.mark.parametrize("fp", [None, 0.5])
 def test_compaction_cap_boundary_sweep(spark, delta, fp):

@@ -322,3 +322,23 @@ def test_compaction_reclaim_and_frozen_fold_stay_broadcast(spark):
     # no sort-merge anywhere in the cap machinery
     assert "SortMergeJoin" not in plan2
     release_all()
+
+
+def test_salted_build_input_has_one_exchange(spark, tokseq_path):
+    """The salted partial build reads its input through exactly one
+    Exchange, the key placement onto min(parallelism, #keys) partitions;
+    the map-side build itself adds no shuffle."""
+    import re
+
+    from marker_spark.agg import build_partials_arrow, salted_repartition
+
+    df = spark.read.parquet(tokseq_path)
+    shares = {"cc": 0.46, "wiki": 0.17, "code": 0.08}
+    salted = salted_repartition(df, "source", shares, parallelism=16)
+    n = 7 + 3 + 1  # salts: round(share * 16), at least 1
+    plan = _plan(build_partials_arrow(salted, lambda states, batch: None, ["source"]))
+    tree = plan.split("\n\n")[0]
+    assert len(re.findall(r"\bExchange\b", tree)) == 1, tree
+    assert "MapInArrow" in tree
+    args = re.findall(r"Arguments: (\w+)\(.*\), (\d+)\), REPARTITION_BY_NUM", plan)
+    assert args == [("shufflepartitionidpassthrough", str(n))], plan
